@@ -420,7 +420,8 @@ object SimilarityOps {
 
   /** Trained-centroid memo: the full-probe and nProbe query faces share
     * one training run per (dir, k, iters) — training is deterministic,
-    * so re-running it per query would only re-spend the Lloyd's jobs. */
+    * so re-running it per query would only re-spend the Lloyd's jobs.
+    * Cleared by [[DedupOps.releaseShared]]. */
   private val centroidCache =
     scala.collection.mutable.Map.empty[(String, Int, Int), Seq[(Int, Seq[Float])]]
 
@@ -731,6 +732,7 @@ object SimilarityOps {
 
   private[graft] def clearNearDupCache(): Unit = {
     nearDupCache.synchronized(nearDupCache.clear())
+    centroidCache.synchronized(centroidCache.clear())
     bucketedCache.synchronized(bucketedCache.clear())
     semanticLabelCache.synchronized(semanticLabelCache.clear())
     int8GridCache.synchronized(int8GridCache.clear())

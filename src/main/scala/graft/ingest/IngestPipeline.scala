@@ -1,10 +1,9 @@
 package graft.ingest
 
-import java.util.concurrent.Executors
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors}
 
 import scala.collection.mutable
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -44,18 +43,16 @@ object IngestPipeline {
       elastic_job_duration: String,
       total_job_duration: String)
 
-  /** T8 `Times` session state (helpers.js:89–120): start/end per sink +
-    * the working file set; `isComplete` is the barrier predicate. */
+  /** T8 `Times` session state (helpers.js:89–120): start/end per sink;
+    * `isComplete` is the barrier predicate. */
   final class Times {
     var neoStart: Option[Long] = None
     var neoEnd: Option[Long] = None
     var elasticStart: Option[Long] = None
     var elasticEnd: Option[Long] = None
-    var ingestFiles: Seq[String] = Nil
     def isComplete: Boolean = neoEnd.isDefined && elasticEnd.isDefined
     def reset(): Unit = {
       neoStart = None; neoEnd = None; elasticStart = None; elasticEnd = None
-      ingestFiles = Nil
     }
   }
 
@@ -258,14 +255,18 @@ object IngestPipeline {
 
   /** Entity names present in the ingest folder (subdirectories with a
     * `<entity>_headers.csv.gz` / `<entity>_sample.csv.gz` pair —
-    * s3-client.js:20–29). */
+    * s3-client.js:20–29). Deduplicated on the driver: a folder holds a
+    * handful of entities, and over the driver-built [[listKeys]]
+    * listing the project and filter fold into a local relation, so the
+    * names arrive without a Spark job (a `distinct` would add a
+    * shuffle job to every cycle). */
   def entities(listing: DataFrame, ingestName: String): Seq[String] =
     listing
       .filter(col("key").startsWith(s"pending/$ingestName/"))
       .select(get(split(col("key"), "/"), lit(2)).as("entity"),
         get(split(col("key"), "/"), lit(3)).as("file"))
       .filter(col("file").isNotNull)
-      .select("entity").distinct().collect().map(_.getString(0)).toSeq.sorted
+      .select("entity").collect().map(_.getString(0)).toSeq.distinct.sorted
 
   /** S5: load one entity's CSV.gz pair — header row shipped in the
     * sidecar `_headers` file, data in `_sample` (schema-on-file). */
@@ -281,15 +282,44 @@ object IngestPipeline {
       .option("entity", entity)
       .load()
 
+  /** Runs `tasks` on at most `width` threads and waits for ALL of them
+    * (join-all): a failure stops tasks that have not started yet, but
+    * never abandons one that has, so no write is still running when the
+    * caller sees the error (a retry could otherwise race it on the same
+    * target). The first failure is rethrown with any later ones
+    * attached as suppressed. The threads are created per call so they
+    * inherit the caller's Spark local properties (job group, scheduler
+    * pool). Width 1 runs the tasks inline, in order. */
+  private[graft] def joinAll(width: Int)(tasks: Seq[() => Unit]): Unit =
+    if (width <= 1) tasks.foreach(_())
+    else {
+      val failures = new ConcurrentLinkedQueue[Throwable]
+      val pool = Executors.newFixedThreadPool(width)
+      val calls = tasks.map { t =>
+        (() => if (failures.isEmpty)
+          try t() catch { case e: Throwable => failures.add(e) }): Callable[Unit]
+      }
+      try pool.invokeAll(calls.asJava)
+      finally pool.shutdown()
+      failures.asScala.toList match {
+        case first :: rest => rest.foreach(first.addSuppressed); throw first
+        case Nil => ()
+      }
+    }
+
   /** One sink load = feed every entity through the bound [[LoadSink]]
     * (S9+S10 idempotency is the sink's contract — the parquet binding
-    * overwrites `warehouse/<sink>/<entity>`). */
+    * overwrites `warehouse/<sink>/<entity>`). The entities load
+    * concurrently, `min(entities, defaultParallelism)` wide: each load
+    * is a small job that leaves most cores idle, so serial loads spend
+    * the cycle waiting on job scheduling, not on data. */
   private def runSink(spark: SparkSession, bucket: String,
                       params: IngestParams, sink: LoadSink,
                       entityNames: Seq[String]): Unit =
-    entityNames.foreach { e =>
-      sink.writeEntity(e, loadEntity(spark, bucket, params.ingestName, e))
-    }
+    joinAll(math.min(entityNames.size, spark.sparkContext.defaultParallelism))(
+      entityNames.map { e => () =>
+        sink.writeEntity(e, loadEntity(spark, bucket, params.ingestName, e))
+      })
 
   /** T6 rolling-update / CI-settle stage (ingestor.js:231–236, 259): after
     * a sink's load completes, the reference sleeps ONE polling interval
@@ -330,7 +360,11 @@ object IngestPipeline {
 
   /** T5: THE core scheduling semantic — bulk runs both sinks in parallel
     * (async.parallel, ingestor.js:272–281); delta runs neo4j strictly
-    * before elastic (async.eachSeries, ingestor.js:283–287). Each sink
+    * before elastic (async.eachSeries, ingestor.js:283–287): every neo4j
+    * entity write ends before any elastic write starts. Both parallel
+    * paths (the two bulk sinks, and a sink's entities in [[runSink]])
+    * are join-all ([[joinAll]]): a failed sink surfaces only after
+    * every started write has finished. Each sink
     * finishes with the T6 rolling-update stage before its end time is
     * recorded (runJob's waterfall, ingestor.js:224–246). */
   def runSinks(spark: SparkSession, bucket: String, warehouse: String,
@@ -354,12 +388,8 @@ object IngestPipeline {
       awaitRollingUpdate(spark, () => podsFor("elastic"), times.elasticStart.get, settle, maxPolls)
       times.elasticEnd = Some(clock()); onSinkEvent("elastic", "end")
     }
-    if (params.ingestType == "bulk") {
-      val pool = Executors.newFixedThreadPool(2)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(Seq(Future(neo()), Future(elastic()))), Duration.Inf)
-      finally pool.shutdown()
-    } else {                        // incremental/delta: strictly serial
+    if (params.ingestType == "bulk") joinAll(2)(Seq(() => neo(), () => elastic()))
+    else {                          // incremental/delta: strictly serial
       neo()
       elastic()
     }
@@ -375,7 +405,10 @@ object IngestPipeline {
   /** The full batch cycle: returns the metrics row if an ingest ran, None
     * if the pipeline is in a wait state (empty bucket / no marker folder /
     * manifest not yet arrived). Any stage error propagates — the Spark
-    * analogue of enterErrorState is a failed job, not a silent spin (T7). */
+    * analogue of enterErrorState is a failed job, not a silent spin (T7).
+    * Unlike [[pollForIngest]], the cycle asks no separate empty-bucket
+    * or timestamp-folder question: [[oldestPending]] already answers
+    * None for both. */
   def processPendingOnce(spark: SparkSession, bucket: String, warehouse: String,
                          clock: () => Long = () => System.currentTimeMillis / 1000,
                          onSinkEvent: (String, String) => Unit = (_, _) => (),
@@ -386,10 +419,6 @@ object IngestPipeline {
     import spark.implicits._
     val bound = sinks.getOrElse(Sinks.parquet(spark, warehouse))
     val listing = listKeys(spark, bucket)
-    if (listing.isEmpty) return None
-    val hasTs = ListingOps.hasTimestampFolders(listing)
-      .collect().headOption.exists(_.getBoolean(0))
-    if (!hasTs) return None
     val params = oldestPending(listing) match {
       case None => return None
       case Some(p) => p
@@ -397,8 +426,6 @@ object IngestPipeline {
     if (!manifestPresent(listing, params.ingestName)) return None
 
     val times = new Times
-    times.ingestFiles = ListingOps.ingestFiles(listing, params.ingestName)
-      .collect().map(_.getString(0)).toSeq
     val startSec = clock()
     val entityNames = entities(listing, params.ingestName)
     runSinks(spark, bucket, warehouse, params, entityNames, times, clock,

@@ -17,9 +17,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    recreates `<sink>_<entity>` per load — a re-run replaces the
   *    prior load, never duplicates it (S10).
   *  - **Concurrent sinks (T5)**: bulk ingests drive the two sink names
-  *    from two threads; each name writes a DIFFERENT table, and the
+  *    from two threads, and each sink loads its entities concurrently;
+  *    every (name, entity) pair writes a DIFFERENT table, and the
   *    embedded engine serializes DDL internally, so concurrent calls
-  *    for different names are safe (calls for one name are serial by
+  *    for different pairs are safe (calls for one pair are serial by
   *    the pipeline's contract).
   *  - **At-least-once metrics**: `SaveMode.Append` into `es_load_dates`
   *    — a replayed append lands a second row, exactly the semantics the

@@ -17,9 +17,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    before relaunching, ingestor.js:136–146).
   *  - T5 ordering is the PIPELINE's job, not the sink's: bulk ingests
   *    drive both sinks from two threads concurrently, delta ingests
-  *    drive neo4j strictly before elastic — so implementations must
-  *    tolerate concurrent calls for DIFFERENT sink names (calls for one
-  *    name are always serial).
+  *    drive neo4j strictly before elastic, and within one sink the
+  *    entities load concurrently — so implementations must tolerate
+  *    concurrent calls for different sink names AND for different
+  *    entities of one name (calls for one (name, entity) pair are
+  *    always serial).
   *  - [[MetricsSink.append]] is at-least-once: it runs after the load
   *    completes and before folder cleanup, so a crash between the two
   *    can replay the append (the reference has the same window between

@@ -1,12 +1,18 @@
 package graft
 
-import java.io.{File, FileOutputStream}
 import java.nio.file.{Files, Paths}
-import java.util.zip.GZIPOutputStream
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.collection.mutable
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration._
 
-import graft.ingest.IngestPipeline
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+
+import graft.ingest.{IngestPipeline, LoadSink, MetricsSink, Sinks}
 
 /** Scripted-sequence tests for the ingest dataflow T2–T5, mirroring the
   * reference's mock-sequenced loop tests (ingestor.spec.js): manifest
@@ -128,6 +134,164 @@ class IngestPipelineSpec extends SparkSuite {
     assert(metrics.columns.toSet == Set("ingest", "type", "load_date",
       "readable_date", "neo_job_duration", "elastic_job_duration",
       "total_job_duration"))
+  }
+
+  private val threeEntities = Seq("person", "vehicle", "address")
+  private val InSink = "graft.spec.inSink"
+
+  /** Wraps the parquet sinks and records every `writeEntity` as
+    * (sink, entity, start tick, end tick) on one shared tick counter.
+    * A write waits (up to 10 s) until a second write of its sink is in
+    * flight, so concurrent entity loads are observed deterministically
+    * and serial ones read as a peak of 1. Writes and metrics appends run
+    * under the local property [[InSink]], so a listener can tell their
+    * jobs from the cycle's control jobs. */
+  private final class RecordingSinks(warehouse: String) {
+    private val tick = new AtomicLong
+    private val inFlight = mutable.Map.empty[String, Int].withDefaultValue(0)
+    val peak: mutable.Map[String, Int] = mutable.Map.empty[String, Int].withDefaultValue(0)
+    val calls = mutable.ArrayBuffer.empty[(String, String, Long, Long)]
+    private val base = Sinks.parquet(spark, warehouse)
+
+    private def marked[T](body: => T): T = {
+      val sc = spark.sparkContext
+      val prev = sc.getLocalProperty(InSink)
+      sc.setLocalProperty(InSink, "true")
+      try body finally sc.setLocalProperty(InSink, prev)
+    }
+
+    val sinks: Sinks = Sinks(
+      load = n => new LoadSink {
+        val name: String = n
+        def writeEntity(entity: String, df: DataFrame): Unit = {
+          val start = RecordingSinks.this.synchronized {
+            inFlight(n) += 1
+            peak(n) = math.max(peak(n), inFlight(n))
+            RecordingSinks.this.notifyAll()
+            val deadline = System.nanoTime() + 10.seconds.toNanos
+            while (peak(n) < 2 && System.nanoTime() < deadline)
+              RecordingSinks.this.wait(100)
+            tick.incrementAndGet()
+          }
+          try marked(base.load(n).writeEntity(entity, df))
+          finally RecordingSinks.this.synchronized {
+            inFlight(n) -= 1
+            calls += ((n, entity, start, tick.incrementAndGet()))
+          }
+        }
+      },
+      metrics = m => marked(base.metrics.append(m)))
+  }
+
+  test("delta: a sink's entity writes overlap, every neo4j write ends before " +
+       "any elastic write starts, and one control job runs outside the writes") {
+    val bucket = tmpDir("graft-bucket")
+    val wh = tmpDir("graft-wh")
+    makeIngest(bucket, "1538055240", "incremental", entities = threeEntities)
+    val rec = new RecordingSinks(wh)
+    val sc = spark.sparkContext
+    val controlJobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties == null || e.properties.getProperty(InSink) == null)
+          controlJobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val m = try IngestPipeline.processPendingOnce(spark, bucket, wh,
+      sinks = Some(rec.sinks))
+    finally { ListenerBusDrain(sc); sc.removeSparkListener(listener) }
+    assert(m.map(_.`type`).contains("incremental"))
+
+    assert(rec.peak("neo4j") >= 2 && rec.peak("elastic") >= 2,
+      s"entity writes of one sink never overlapped: ${rec.peak}")
+    val (neo, elastic) = rec.calls.partition(_._1 == "neo4j")
+    assert(neo.map(_._2).sorted == threeEntities.sorted)
+    assert(elastic.map(_._2).sorted == threeEntities.sorted)
+    assert(neo.map(_._4).max < elastic.map(_._3).min,
+      s"delta must finish every neo4j write before elastic starts: ${rec.calls}")
+    // the oldest-pending pick is the cycle's one control job; the
+    // empty-bucket, timestamp-folder, file-list and entity questions
+    // are answered without a job
+    assert(controlJobs.get <= 1, s"${controlJobs.get} control jobs in a delta cycle")
+  }
+
+  test("bulk: every (sink, entity) lands exactly once") {
+    val bucket = tmpDir("graft-bucket")
+    val wh = tmpDir("graft-wh")
+    makeIngest(bucket, "1538055240", "bulk", entities = threeEntities)
+    val rec = new RecordingSinks(wh)
+    assert(IngestPipeline.processPendingOnce(spark, bucket, wh,
+      sinks = Some(rec.sinks)).isDefined)
+    val expected = for (s <- Seq("elastic", "neo4j"); e <- threeEntities.sorted)
+      yield (s, e)
+    assert(rec.calls.map(c => (c._1, c._2)).sorted == expected, rec.calls)
+    expected.foreach { case (s, e) =>
+      val df = spark.read.parquet(s"$wh/$s/$e")
+      assert(df.columns.toSeq == Seq(s"${e}_id", "name", "age"))
+      assert(df.count() == 3, s"$s/$e")
+    }
+    assert(!Files.exists(Paths.get(s"$bucket/pending/1538055240")))
+  }
+
+  test("bulk is join-all: a failing sink surfaces only after the other " +
+       "sink's write finishes, with no metrics row and no cleanup") {
+    val bucket = tmpDir("graft-bucket")
+    val wh = tmpDir("graft-wh")
+    makeIngest(bucket, "1538055240", "bulk")
+    val neoFailed = new CountDownLatch(1)
+    val elasticStarted = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    @volatile var elasticDone = false
+    val appended = new AtomicInteger
+    val binding = Sinks(
+      load = {
+        case "neo4j" => new LoadSink {
+          val name = "neo4j"
+          def writeEntity(entity: String, df: DataFrame): Unit = {
+            neoFailed.countDown()
+            throw new IllegalStateException("neo4j load failed")
+          }
+        }
+        case other => new LoadSink {
+          val name: String = other
+          def writeEntity(entity: String, df: DataFrame): Unit = {
+            elasticStarted.countDown()
+            release.await(30, TimeUnit.SECONDS)
+            elasticDone = true
+          }
+        }
+      },
+      metrics = new MetricsSink {
+        def append(m: IngestPipeline.IngestMetrics): Unit = appended.incrementAndGet()
+      })
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val cycle = Future(IngestPipeline.processPendingOnce(spark, bucket, wh,
+      sinks = Some(binding)))
+    try {
+      assert(neoFailed.await(30, TimeUnit.SECONDS))
+      assert(elasticStarted.await(30, TimeUnit.SECONDS))
+      Thread.sleep(500)
+      assert(!cycle.isCompleted,
+        "the cycle returned while the elastic write was still running")
+    } finally release.countDown()
+    val e = intercept[IllegalStateException](Await.result(cycle, 60.seconds))
+    assert(e.getMessage == "neo4j load failed")
+    assert(elasticDone)
+    assert(appended.get == 0, "a failed cycle appended a metrics row")
+    assert(Files.exists(Paths.get(s"$bucket/pending/1538055240")),
+      "a failed cycle deleted its folder")
+  }
+
+  test("joinAll rethrows the first failure with the later ones suppressed") {
+    val bStarted = new CountDownLatch(1)
+    val e = intercept[IllegalStateException] {
+      IngestPipeline.joinAll(2)(Seq(
+        () => { bStarted.await(30, TimeUnit.SECONDS); throw new IllegalStateException("a") },
+        () => { bStarted.countDown(); Thread.sleep(200); throw new IllegalArgumentException("b") }))
+    }
+    assert(e.getMessage == "a")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("b"))
   }
 
   private def podJson(ready: Boolean, startedAtIso: String) =

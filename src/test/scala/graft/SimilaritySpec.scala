@@ -125,6 +125,17 @@ class SimilaritySpec extends SparkSuite {
     assert(hits >= 9, s"only $hits/10 planted neighbors found: $top1")
   }
 
+  test("releaseShared drops the trained IVF centroids: the next IVF face trains again") {
+    def billed() = graft.BuildTimers.snapshot().getOrElse("ivf_centroids", 0.0)
+    SimilarityOps.ivfTopK(spark, sf)
+    val trained = billed()
+    SimilarityOps.ivfTopK(spark, sf)
+    assert(billed() == trained, "a warm IVF face retrained its centroids")
+    graft.ext.DedupOps.releaseShared()
+    SimilarityOps.ivfTopK(spark, sf)
+    assert(billed() > trained, "the centroid memo survived releaseShared")
+  }
+
   test("PQ top-k recall ≥ 0.9 for planted high-similarity neighbors") {
     import spark.implicits._
     val base = spark.read.parquet(s"$sf/embeddings.parquet")

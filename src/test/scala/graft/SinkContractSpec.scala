@@ -11,7 +11,8 @@ import graft.ingest.{DocStoreSinks, IngestPipeline, JdbcSinks, Sinks}
   * document-store binding (per-document upsert-by-id) — so the trait
   * contract is validated across genuinely different storage models.
   * Clauses (Sinks.scala doc): idempotent writeEntity, tolerance of
-  * concurrent calls for different sink names (T5 bulk), at-least-once
+  * concurrent calls for different sink names (T5 bulk) and for
+  * different entities of one name (the entity fan-out), at-least-once
   * metrics append, and the full pipeline driving the binding end to
   * end. */
 class SinkContractSpec extends SparkSuite {
@@ -68,6 +69,28 @@ class SinkContractSpec extends SparkSuite {
       t1.start(); t2.start(); t1.join(); t2.join()
       assert(b.readEntity("neo4j", "place").count() == 1, b.label)
       assert(b.readEntity("elastic", "place").count() == 2, b.label)
+
+      // --- concurrent calls for DIFFERENT entities of one sink name
+      // (the per-sink entity fan-out) each land intact
+      val entityRows = (1 to 4).map { i =>
+        s"kind$i" -> (1 to i).map(j => (100L * i + j, s"e$i-$j"))
+      }
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      val writers = entityRows.map { case (entity, rows) =>
+        val df = rows.toDF("id", "name")
+        val t = new Thread(() =>
+          try { go.await(); elastic.writeEntity(entity, df) }
+          catch { case e: Throwable => errors.add(e) })
+        t.start(); t
+      }
+      go.countDown(); writers.foreach(_.join())
+      assert(errors.isEmpty, s"[${b.label}] concurrent entity writes failed: $errors")
+      entityRows.foreach { case (entity, rows) =>
+        val got = b.readEntity("elastic", entity).collect()
+          .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+        assert(got == rows, s"[${b.label}] $entity landed as $got")
+      }
 
       // --- metrics are at-least-once: a replayed append lands again,
       // both rows readable with the golden shape intact
